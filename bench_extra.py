@@ -20,24 +20,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import HEADLINE  # noqa: E402
 from knowledge_graph_rag_spark.session import get_spark  # noqa: E402
-
-HEADLINE = [
-    "top_talkers",
-    "exploit_preparation",
-    "top3_types_per_user",
-    "degree_spikes",
-    "pricing_summary",
-    "revenue_by_nation",
-    "keywords_topk",
-    "language_detect",
-    "exact_dedup_by_source",
-    "ngram_jaccard_pairs",
-    "knn_bruteforce",
-    "benchmark_decontamination",
-    "pii_redaction_stats",
-    "clustering_coefficients",
-]
 
 
 def main() -> None:

@@ -64,6 +64,19 @@ def dedup_exact(df: DataFrame, id_col: str = "id", text_col: str = "text") -> Da
     )
 
 
+def _distinct_word_grams(w, n: int):
+    """Distinct word n-grams (space-joined) of the token array column ``w``.
+    ``w`` must be a projected column, not an inline split expression: each
+    per-element ``F.get(w, i+k)`` would re-evaluate the tokenization (see
+    word_shingles)."""
+    return F.array_distinct(F.transform(
+        F.slice(w, 1, F.greatest(F.size(w) - (n - 1), F.lit(0))),
+        lambda x, i: F.concat_ws(
+            " ", *([x] + [F.get(w, i + k) for k in range(1, n)])
+        ),
+    ))
+
+
 def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """(id, shingle) distinct word n-grams — native transform/slice, no UDF,
     and (r06) NO shuffle: dedup is a per-row ``array_distinct`` before the
@@ -92,13 +105,9 @@ def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Data
 
     w = wsplit_tokens_col(F.col(text_col))
     toks = df.select(F.col(id_col).alias("id"), w.alias("w"))
-    grams = F.transform(
-        F.slice(F.col("w"), 1, F.greatest(F.size("w") - (n - 1), F.lit(0))),
-        lambda x, i: F.concat_ws(
-            " ", *([x] + [F.get(F.col("w"), i + k) for k in range(1, n)])
-        ),
+    return toks.select(
+        "id", F.explode(_distinct_word_grams(F.col("w"), n)).alias("shingle")
     )
-    return toks.select("id", F.explode(F.array_distinct(grams)).alias("shingle"))
 
 
 def ngram_jaccard_pairs(
@@ -238,17 +247,6 @@ def verify_pairs_exact_jaccard(
     from ..functions.text import wsplit_tokens_col
 
     w = wsplit_tokens_col(F.col(text_col))
-    # token array materialized before the gram lambda reads it with F.get —
-    # inlining the split there re-evaluates the regex per element (see
-    # word_shingles)
-    grams = F.array_distinct(
-        F.transform(
-            F.slice(F.col("w"), 1, F.greatest(F.size("w") - (n - 1), F.lit(0))),
-            lambda x, i: F.concat_ws(
-                " ", *([x] + [F.get(F.col("w"), i + k) for k in range(1, n)])
-            ),
-        )
-    )
     # prune docs to ids that actually appear in a pair BEFORE building the
     # gram arrays — candidate sets are tiny next to the corpus, and without
     # the semi-join every corpus row pays the split/transform/distinct cost
@@ -261,7 +259,7 @@ def verify_pairs_exact_jaccard(
         docs.select(F.col(id_col).alias("id"), F.col(text_col))
         .join(pair_ids, "id", "left_semi")
         .select("id", w.alias("w"))
-        .select("id", grams.alias("grams"))
+        .select("id", _distinct_word_grams(F.col("w"), n).alias("grams"))
     )
     sa = sets.select(F.col("id").alias("id_a"), F.col("grams").alias("ga"))
     sb = sets.select(F.col("id").alias("id_b"), F.col("grams").alias("gb"))
@@ -283,6 +281,35 @@ def verify_pairs_exact_jaccard(
 MINHASH_NUM_FEATURES = 1 << 20
 
 
+def _minhash_featurize(
+    df: DataFrame, id_col: str, text_col: str, num_hash_tables: int,
+):
+    """``(feats, model)``: per-doc (id, features) over word-3-gram shingles
+    and the fitted MinHashLSH model — the ONE MinHash featurizer behind the
+    batch join and the persisted index.
+
+    Features come from HashingTF (stateless fixed 2^20 hash space, binary
+    presence), not CountVectorizer: no .fit pass, no driver-side vocabulary,
+    so the executor/driver memory is independent of corpus vocabulary size.
+    The MinHash coefficient family is drawn from a FIXED seed, so the same
+    document hashes identically in any session, cluster or batch. Docs with
+    <3 words have no shingles and get no row."""
+    from pyspark.ml.feature import HashingTF, MinHashLSH
+
+    sh = word_shingles(df, id_col, text_col, 3).groupBy("id").agg(
+        F.collect_list("shingle").alias("shingles")
+    )
+    feats = HashingTF(
+        inputCol="shingles", outputCol="features",
+        numFeatures=MINHASH_NUM_FEATURES, binary=True,
+    ).transform(sh)
+    model = MinHashLSH(
+        inputCol="features", outputCol="hashes",
+        numHashTables=num_hash_tables, seed=42,
+    ).fit(feats)
+    return feats, model
+
+
 def minhash_lsh_pairs(
     df: DataFrame, id_col: str = "id", text_col: str = "text",
     jaccard_max_dist: float = 0.3, num_hash_tables: int = 12,
@@ -290,22 +317,11 @@ def minhash_lsh_pairs(
     """MinHash+LSH candidate pairs over word-3-gram shingles (Spark ML
     approxSimilarityJoin — banding + bucket join, all JVM).
 
-    Features come from HashingTF (stateless fixed 2^20 hash space, binary
-    presence), not CountVectorizer: no .fit pass, no driver-side vocabulary,
-    so the executor/driver memory is independent of corpus vocabulary size."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    sh = word_shingles(df, id_col, text_col, 3).groupBy("id").agg(
-        F.collect_list("shingle").alias("shingles")
-    )
-    ht = HashingTF(
-        inputCol="shingles", outputCol="features",
-        numFeatures=MINHASH_NUM_FEATURES, binary=True,
-    )
-    feats = ht.transform(sh)
-    lsh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42
-    ).fit(feats)
+    Banding only proposes candidates; the join then keeps pairs whose
+    keyDistance — the EXACT Jaccard distance of the two hashed shingle sets
+    — is below ``jaccard_max_dist``, and ``est_jaccard`` is 1 − that
+    distance."""
+    feats, lsh = _minhash_featurize(df, id_col, text_col, num_hash_tables)
     joined = lsh.approxSimilarityJoin(feats, feats, jaccard_max_dist, "dist")
     return joined.filter(F.col("datasetA.id") < F.col("datasetB.id")).select(
         F.col("datasetA.id").alias("id_a"),
@@ -561,31 +577,16 @@ def _minhash_buckets(
     num_hash_tables: int = 12,
 ) -> DataFrame:
     """``(id, band, bucket)`` banded MinHash bucket assignments — the
-    session-independent building block of the persisted near-dup index.
-
-    Stability contract: HashingTF is stateless (fixed 2^20 space) and the
-    MinHash coefficient family is drawn from a FIXED seed, so the same
-    document produces byte-identical (band, bucket) rows in any session, on
-    any cluster, in any batch — which is what lets an index built yesterday
-    answer probes computed today. Docs with <3 words have no shingles and
-    get no buckets (they cannot near-dup by trigram overlap)."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
+    session-independent building block of the persisted near-dup index:
+    the featurizer is stateless and fixed-seed (see _minhash_featurize), so
+    the same document produces byte-identical (band, bucket) rows in any
+    session, on any cluster, in any batch — which is what lets an index
+    built yesterday answer probes computed today. Docs with <3 words get no
+    buckets (they cannot near-dup by trigram overlap)."""
     from pyspark.ml.functions import vector_to_array
 
-    sh = word_shingles(df, id_col, text_col, 3).groupBy("id").agg(
-        F.collect_list("shingle").alias("shingles")
-    )
-    ht = HashingTF(
-        inputCol="shingles", outputCol="features",
-        numFeatures=MINHASH_NUM_FEATURES, binary=True,
-    )
-    feats = ht.transform(sh)
-    model = MinHashLSH(
-        inputCol="features", outputCol="hashes",
-        numHashTables=num_hash_tables, seed=42,
-    ).fit(feats)
-    hashed = model.transform(feats)
-    return hashed.select(
+    feats, model = _minhash_featurize(df, id_col, text_col, num_hash_tables)
+    return model.transform(feats).select(
         "id", F.posexplode("hashes").alias("band", "h")
     ).select(
         "id",
@@ -639,11 +640,14 @@ def minhash_index_probe(
     so an index that already contains the probe batch can be probed
     idempotently.
 
-    ``jaccard_max_dist``: when set, pairs are filtered by matching-band
-    fraction — Spark's MinHash ``approxSimilarityJoin`` keyDistance is
-    1 − matches/numHashTables, so this replicates
-    ``minhash_lsh_pairs(jaccard_max_dist)`` semantics over the persisted
-    index. ``bucket_cap``: skip index (band, bucket) groups larger than
+    ``jaccard_max_dist``: when set, a pair must match in at least
+    ceil((1 − jaccard_max_dist) · numHashTables) bands — a filter on the
+    matching-band FRACTION, a banded estimate of the Jaccard similarity in
+    steps of 1/numHashTables. This is NOT the batch
+    ``minhash_lsh_pairs(jaccard_max_dist)`` criterion, which filters on the
+    EXACT Jaccard distance of the two hashed shingle sets (Spark's MinHash
+    keyDistance): near the threshold the two can disagree in either
+    direction. ``bucket_cap``: skip index (band, bucket) groups larger than
     this — bounds the join fan-out when one degenerate boilerplate bucket
     accrues O(corpus) members (documented recall tail, same philosophy as
     _cap_band_buckets)."""

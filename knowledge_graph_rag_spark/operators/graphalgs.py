@@ -198,9 +198,9 @@ def kcore(
     classic iterative-DataFrame trap; same hygiene as ``pagerank``, blocks
     reclaimed by the ContextCleaner, nothing left pinned). Rounds are bounded
     by the peel depth of the graph (≤ its degeneracy ordering depth, usually
-    a handful) and hard-capped at ``max_iter``; if the cap is hit the result
-    is the partially-peeled graph's degrees (documented, not silent — the
-    convergence probe simply didn't reach a fixpoint within budget).
+    a handful) and capped at ``max_iter`` peels: a graph still peeling after
+    the cap raises ``RuntimeError`` instead of returning a partially-peeled
+    graph's degrees.
     """
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -220,10 +220,12 @@ def kcore(
         )
 
     deg = degrees(e)
-    for _ in range(max_iter):
+    for peels in range(max_iter + 1):
         bad = deg.filter(F.col("d") < k).select("n").localCheckpoint(eager=True)
         if bad.isEmpty():
             break
+        if peels == max_iter:
+            raise RuntimeError(f"kcore did not converge in {max_iter} peel rounds")
         e = (
             e.join(bad.withColumnRenamed("n", "u"), "u", "left_anti")
             .join(bad.withColumnRenamed("n", "v"), "v", "left_anti")

@@ -37,11 +37,28 @@ def _as_double(col):
     return col.cast("array<double>")
 
 
-def _cosine(a, b):
-    dot = cosine_sim_col(a, b)
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x * x))
-    return dot / (na * nb)
+def _norm(c):
+    """L2 norm of an array<double> column — projected on the vector side
+    BEFORE the candidate join (once per vector; once per (vector, table)
+    row for LSH), never per pair, so per-pair work is just the dot product."""
+    return F.sqrt(F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x))
+
+
+def _score_topk(cand: DataFrame, k: int, round_digits: int = 6) -> DataFrame:
+    """The one score-then-rank tail of every exact/ANN cosine path.
+
+    ``cand`` carries (query_id, qe, qn, neighbor_id, e, en): both vectors and
+    their precomputed norms. Cosine is rounded BEFORE ranking so ties break
+    on neighbor_id identically in every engine."""
+    cosine = cosine_sim_col(F.col("qe"), F.col("e")) / (F.col("qn") * F.col("en"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
+    return (
+        cand.select(
+            "query_id", "neighbor_id", F.round(cosine, round_digits).alias("cosine")
+        )
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
 
 
 def brute_force_topk(
@@ -50,37 +67,17 @@ def brute_force_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    round_digits: int = 6,
 ) -> DataFrame:
-    """(query_id, neighbor_id, cosine, rank) exact top-k; queries broadcast.
-
-    r06: each side's L2 norm is a projected column computed once per vector
-    — the old per-pair ``_cosine`` re-derived BOTH norms inside interpreted
-    higher-order aggregates for every (query, candidate) pair (queries × n
-    redundant norm evaluations). Same arithmetic, same rounding."""
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
+    """(query_id, neighbor_id, cosine, rank) exact top-k; queries broadcast."""
     cand = vectors.select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("e")
-    ).select("neighbor_id", "e", norm(F.col("e")).alias("en"))
+    ).select("neighbor_id", "e", _norm(F.col("e")).alias("en"))
     qs = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qe")
-    ).select("query_id", "qe", norm(F.col("qe")).alias("qn"))
+    ).select("query_id", "qe", _norm(F.col("qe")).alias("qn"))
     pairs = F.broadcast(qs).join(cand, F.col("neighbor_id") != F.col("query_id"))
-    scored = pairs.withColumn(
-        "cosine",
-        F.round(
-            cosine_sim_col(F.col("qe"), F.col("e"))
-            / (F.col("qn") * F.col("en")),
-            6,
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        scored.select("query_id", "neighbor_id", "cosine")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _score_topk(pairs, k, round_digits)
 
 
 def _hyperplanes(dim: int, bits: int, table: int, seed: int = 42) -> list[list[float]]:
@@ -245,28 +242,20 @@ def ivf_topk(
 
     v = vectors.select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("e")
-    )
+    ).withColumn("en", _norm(F.col("e")))
     v_cells = _assign_cells(v, centroids, "e", 1).select(
-        "neighbor_id", "e", F.get("cells", 0).alias("cell")
+        "neighbor_id", "e", "en", F.get("cells", 0).alias("cell")
     )
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qe")
-    )
+    ).withColumn("qn", _norm(F.col("qe")))
     q_cells = _assign_cells(q, centroids, "qe", n_probe).select(
-        "query_id", "qe", F.explode("cells").alias("cell")
+        "query_id", "qe", "qn", F.explode("cells").alias("cell")
     )
-    cand = (
-        q_cells.join(v_cells, "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "qe", "neighbor_id", "e")
+    cand = q_cells.join(v_cells, "cell").filter(
+        F.col("neighbor_id") != F.col("query_id")
     )
-    scored = cand.withColumn("cosine", F.round(_cosine(F.col("qe"), F.col("e")), 6))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        scored.select("query_id", "neighbor_id", "cosine")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _score_topk(cand, k)
 
 
 def build_ivf_index(
@@ -377,20 +366,15 @@ def ivf_query_index(
             for c in cells
         ],
         "query_id long, qe array<double>, cell int",
+    ).withColumn("qn", _norm(F.col("qe")))
+    index = spark.read.parquet(path).filter(F.col("cell").isin(probed)).select(
+        "cell", F.col("vec_id").alias("neighbor_id"), "e",
+        _norm(F.col("e")).alias("en"),
     )
-    index = spark.read.parquet(path).filter(F.col("cell").isin(probed))
-    cand = (
-        q_cells.join(index, "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "qe", F.col("vec_id").alias("neighbor_id"), "e")
+    cand = q_cells.join(index, "cell").filter(
+        F.col("neighbor_id") != F.col("query_id")
     )
-    scored = cand.withColumn("cosine", F.round(_cosine(F.col("qe"), F.col("e")), 6))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        scored.select("query_id", "neighbor_id", "cosine")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _score_topk(cand, k)
 
 
 def lsh_topk(
@@ -405,26 +389,20 @@ def lsh_topk(
 ) -> DataFrame:
     """ANN top-k: bucket-join candidate generation + exact cosine verify.
     Recall < 1 by construction; raise num_tables / lower bits for more."""
-    vb = lsh_buckets(vectors, dim, bits, num_tables, id_col, vec_col)
+    vb = lsh_buckets(vectors, dim, bits, num_tables, id_col, vec_col).select(
+        F.col("id").alias("neighbor_id"), "e", _norm(F.col("e")).alias("en"),
+        "table", "bucket",
+    )
     qb = lsh_buckets(queries, dim, bits, num_tables, id_col, vec_col).select(
-        F.col("id").alias("query_id"),
-        F.col("e").alias("qe"),
-        "table",
-        "bucket",
+        F.col("id").alias("query_id"), F.col("e").alias("qe"),
+        _norm(F.col("e")).alias("qn"), "table", "bucket",
     )
     cand = (
         qb.join(vb, ["table", "bucket"])
-        .filter(F.col("id") != F.col("query_id"))
-        .select("query_id", "qe", F.col("id").alias("neighbor_id"), "e")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cand.withColumn("cosine", F.round(_cosine(F.col("qe"), F.col("e")), 6))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        scored.select("query_id", "neighbor_id", "cosine")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _score_topk(cand, k)
 
 
 # --- IVF-PQ (product quantization; Jégou, Douze, Schmid, TPAMI 2011) --------

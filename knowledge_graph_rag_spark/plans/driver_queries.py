@@ -2296,7 +2296,7 @@ def kcore_membership(spark, sf_dir):
 @q(
     "dup_cluster_components",
     """
-    WITH sh0 AS MATERIALIZED (
+    WITH RECURSIVE sh0 AS MATERIALIZED (
       SELECT DISTINCT doc_id, unnest([ w[i] || ' ' || w[i+1] || ' ' || w[i+2]
                FOR i IN range(1, len(w) - 1) ]) AS shingle
       FROM (SELECT doc_id,
@@ -2318,54 +2318,27 @@ def kcore_membership(spark, sf_dir):
       WHERE isect * 1.0 / (sa.sz + sb.sz - isect) >= 0.03
     ), sym AS MATERIALIZED (
       SELECT a AS u, b AS v FROM pairs UNION ALL SELECT b, a FROM pairs
-    ), l0 AS MATERIALIZED (
-      SELECT DISTINCT u AS n, u AS l FROM sym
-    ), l1 AS MATERIALIZED (
-      SELECT n, min(l) AS l FROM (
-        SELECT n, l FROM l0
-        UNION ALL
-        SELECT s.u AS n, b.l AS l FROM sym s JOIN l0 b ON b.n = s.v
-      ) GROUP BY n
-    ), l2 AS MATERIALIZED (
-      SELECT n, min(l) AS l FROM (
-        SELECT n, l FROM l1
-        UNION ALL
-        SELECT s.u AS n, b.l AS l FROM sym s JOIN l1 b ON b.n = s.v
-      ) GROUP BY n
-    ), l3 AS MATERIALIZED (
-      SELECT n, min(l) AS l FROM (
-        SELECT n, l FROM l2
-        UNION ALL
-        SELECT s.u AS n, b.l AS l FROM sym s JOIN l2 b ON b.n = s.v
-      ) GROUP BY n
-    ), l4 AS MATERIALIZED (
-      SELECT n, min(l) AS l FROM (
-        SELECT n, l FROM l3
-        UNION ALL
-        SELECT s.u AS n, b.l AS l FROM sym s JOIN l3 b ON b.n = s.v
-      ) GROUP BY n
-    ), l5 AS MATERIALIZED (
-      SELECT n, min(l) AS l FROM (
-        SELECT n, l FROM l4
-        UNION ALL
-        SELECT s.u AS n, b.l AS l FROM sym s JOIN l4 b ON b.n = s.v
-      ) GROUP BY n
+    ), reach(n, r) AS (
+      SELECT DISTINCT u, u FROM sym
+      UNION
+      SELECT reach.n, sym.v FROM reach JOIN sym ON sym.u = reach.r
+    ), comp AS (
+      SELECT n, min(r) AS l FROM reach GROUP BY n
     )
     SELECT n AS doc_id, l AS component,
            count(*) OVER (PARTITION BY l)::BIGINT AS cluster_size
-    FROM l5
+    FROM comp
     """,
 )
 def dup_cluster_components(spark, sf_dir):
     """Near-dup CLUSTERING — the step curation runs between candidate pairs
     and representative selection: library ngram_jaccard_pairs (df-capped
     trigram Jaccard, loose 0.03 threshold so chains form) feeds
-    canonicalize.connected_components (min-label propagation), giving every
+    canonicalize.connected_components (large-star/small-star), giving every
     clustered doc its component representative (min doc_id) and cluster
-    size. This driver-pins the CC operator itself — previously pytest-only —
-    via an oracle that unrolls 5 MATERIALIZED min-label-propagation rounds
-    in DuckDB (fixpoint needs 2 at sf0.01; under-unrolling cannot silently
-    pass, it would hash-mismatch the run-to-fixpoint Spark labels)."""
+    size. This driver-pins the CC operator itself via an algorithm-free
+    oracle: a recursive reachability closure over the symmetric pair graph,
+    then min over each node's reachable set — exact at any scale."""
     from ..operators.canonicalize import connected_components
     from ..operators.dedup import ngram_jaccard_pairs as lib_pairs
 
@@ -2832,40 +2805,14 @@ def url_domain_stats(spark, sf_dir):
     """,
 )
 def knn_bruteforce(spark, sf_dir):
-    """Brute-force cosine top-k ANN baseline: JVM-side zip_with/aggregate dot
-    product, rank window. Rounded BEFORE ranking so both engines break ties
-    identically.
+    """Brute-force cosine top-k ANN baseline (similarity.brute_force_topk):
+    JVM-side dot products over per-vector norms, rank window. Rounded to 4
+    digits BEFORE ranking so both engines break ties identically."""
+    from ..operators.similarity import brute_force_topk
 
-    r06 shape notes: the element-wise double cast is one native array Cast
-    (codegen) instead of a per-element HOF transform; each side's L2 norm is
-    a projected column computed ONCE per vector (the r05 pre-fix shape
-    re-derived both norms per PAIR — candidate norms 5×, inside interpreted
-    higher-order aggregates), so per-pair work is just the dot product."""
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    emb = _spread(_t(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    ).select("vec_id", "e", norm(F.col("e")).alias("en"))
-    qs = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe"),
-        F.col("en").alias("qn"),
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("qe"), F.col("e"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    pairs = (
-        F.broadcast(qs)
-        .join(emb, F.col("vec_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(dot / (F.col("qn") * F.col("en")), 4))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        pairs.select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
+    emb = _spread(_t(spark, sf_dir, "embeddings"))
+    return brute_force_topk(
+        emb, emb.filter(F.col("vec_id") < 5), k=3, round_digits=4
     )
 
 

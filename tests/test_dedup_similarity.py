@@ -55,11 +55,12 @@ def test_embedding_cosine_pairs(corpus):
 
 
 def test_minhash_no_driver_vocab():
-    """minhash_lsh_pairs must not build a driver-side vocabulary
-    (CountVectorizer.fit = unbounded driver memory at corpus scale)."""
+    """The MinHash featurizer (behind minhash_lsh_pairs and the persisted
+    index) must not build a driver-side vocabulary (CountVectorizer.fit =
+    unbounded driver memory at corpus scale)."""
     import inspect
 
-    src = inspect.getsource(DD.minhash_lsh_pairs)
+    src = inspect.getsource(DD._minhash_featurize)
     assert "CountVectorizer(" not in src  # docstring mentions it; no call
     assert "HashingTF(" in src
     assert DD.MINHASH_NUM_FEATURES == 1 << 20
@@ -1109,7 +1110,7 @@ def test_token_budget_prefilter_exactness_and_shape(spark):
         assert {g for g in got if g[1] == lang} == expect, lang
     # the pre-cut is a broadcast join in the physical plan
     plan = kept._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoop" not in plan
+    assert "BroadcastHashJoin" in plan and "BroadcastNestedLoop" not in plan
     assert "BroadcastExchange" in plan
 
 

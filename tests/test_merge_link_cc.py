@@ -121,10 +121,32 @@ def test_canonical_map_from_links(spark):
     assert len(set(cmap.values())) == 1  # one cluster, one representative
 
 
+def _union_find_components(pairs):
+    """Pure-Python reference: node -> min node id of its component, for
+    every endpoint of a non-self-loop pair."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in pairs:
+        if u == v:
+            continue
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return {x: find(x) for x in parent}
+
+
 def test_cc_implementations_agree(spark):
-    """Label propagation and alternating large-star/small-star produce the
-    same partition (same min-id representative per component) on seeded
-    random graphs of several shapes."""
+    """connected_components equals a union-find reference (same partition,
+    same min-id representative per component) on seeded random graphs of
+    several shapes."""
     import random
 
     for seed, n_nodes, n_edges in ((1, 20, 15), (2, 40, 60), (3, 30, 8)):
@@ -134,22 +156,27 @@ def test_cc_implementations_agree(spark):
             for _ in range(n_edges)
         ]
         edges = spark.createDataFrame(pairs, "u string, v string")
-        a = {r.node: r.component for r in C.connected_components(edges).collect()}
-        b = {
-            r.node: r.component
-            for r in C.connected_components_alternating(edges).collect()
-        }
+        got = C.connected_components(edges).collect()
+        assert len(got) == len({r.node for r in got})  # one row per node
+        a = {r.node: r.component for r in got}
+        b = _union_find_components(pairs)
         assert a == b, (seed, {k: (a.get(k), b.get(k)) for k in set(a) | set(b)
                                if a.get(k) != b.get(k)})
 
 
-def test_cc_alternating_chain(spark):
-    n = 14
-    edges = spark.createDataFrame(
-        [(f"c{i:02d}", f"c{i+1:02d}") for i in range(n)], "u string, v string"
-    )
-    cc = C.connected_components_alternating(edges).collect()
-    assert {r.component for r in cc} == {"c00"} and len(cc) == n + 1
+def test_cc_round_cap_raises(spark):
+    """A chain converges under the default cap, and the same chain with a
+    cap below its round count raises instead of returning unconverged
+    labels (those labels drive irreversible near-dup drops)."""
+    for prefix, n in (("c", 14), ("n", 40)):
+        edges = spark.createDataFrame(
+            [(f"{prefix}{i:02d}", f"{prefix}{i+1:02d}") for i in range(n)],
+            "u string, v string",
+        )
+        cc = C.connected_components(edges).collect()
+        assert {r.component for r in cc} == {f"{prefix}00"} and len(cc) == n + 1
+        with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+            C.connected_components(edges, max_iterations=1)
 
 
 def test_pagerank_vs_numpy_oracle(spark):
@@ -305,6 +332,21 @@ def test_kcore_vs_python_peel(spark):
         df = spark.createDataFrame(edge_list, "src string, dst string")
         got = {(r.node_id, r.degree) for r in kcore(df, k).collect()}
         assert got == peel(edge_list, k), (k, edge_list[:4])
+
+
+def test_kcore_peel_cap_raises(spark):
+    """A path peels from both ends one node per round (k=2 empties it in
+    ~n/2 rounds): a cap below that raises; a cap at or above it returns
+    the (empty) 2-core."""
+    from knowledge_graph_rag_spark.operators.graphalgs import kcore
+
+    n = 12
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(n)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 3 peel rounds"):
+        kcore(path, 2, max_iter=3)
+    assert kcore(path, 2, max_iter=n).count() == 0
 
 
 def test_kcore_leaves_no_pinned_storage(spark):
