@@ -50,12 +50,18 @@ def register_bucketed(
     warehouse that already holds bucketed files must re-declare the spec, not
     rewrite the data (pinned by the kg_submit resume test: the second CLI run
     performs zero data writes). The declared spec must match how the files
-    were written (write_bucketed), or joins would be silently wrong."""
+    were written (write_bucketed), or joins would be silently wrong.
+
+    Any table already registered under ``table_name`` is replaced: in a
+    session that built another warehouse with the same graph id, the name
+    points at THAT warehouse's files. Dropping an external table (one with a
+    LOCATION, as here and in write_bucketed with ``path``) leaves its files."""
     schema = spark.read.parquet(path).schema
     fields = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
     )
     cols = ", ".join(f"`{c}`" for c in bucket_cols)
+    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
     spark.sql(
         f"CREATE TABLE {table_name} ({fields}) USING parquet "
         f"CLUSTERED BY ({cols}) SORTED BY ({cols}) INTO {n_buckets} BUCKETS "

@@ -4,9 +4,11 @@ The LLM-data-pipeline operators (dedup / quality / sampling / token stats)
 exist individually; at 100 TB their COMPOSITION is itself engine work: what
 is materialized between stages, where the pipeline can resume after a crash,
 and which counts survive as lineage. This plan chains them the same way
-``pipeline.run`` chains KG construction — every stage commits a snapshot
-through GraphStore and records itself in the manifest, so a killed job
-resumes idempotently with zero recomputation of completed stages.
+``pipeline.run`` chains KG construction — every stage goes through the one
+run-or-skip runner, ``lineage.RunResult.run_or_skip``: it commits a snapshot
+through GraphStore and records itself in the manifest as
+``dp_<stage>::<dataset_id>``, so a killed job resumes idempotently with zero
+recomputation of completed stages.
 
     stage exact_dedup   md5 content-hash first-seen-wins (one shuffle)
     stage near_dedup    MinHash-LSH candidate pairs → connected components
@@ -29,8 +31,6 @@ the transform.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,14 +38,7 @@ from ..operators import canonicalize as C
 from ..operators import dedup as DD
 from ..operators.sampling import hash_sample
 from ..sources.graph_store import GraphStore
-
-
-@dataclass
-class CurationResult:
-    run_id: str
-    stages_run: list[str] = field(default_factory=list)
-    stages_skipped: list[str] = field(default_factory=list)
-    counts: dict[str, int] = field(default_factory=dict)
+from .lineage import RunResult
 
 
 def _near_dup_drop_ids(docs: DataFrame, jaccard_max_dist: float,
@@ -106,7 +99,7 @@ def curate(
     benchmark: DataFrame | None = None,
     decontam_ngram: int = 13,
     pii_scrub: bool = False,
-) -> CurationResult:
+) -> RunResult:
     """Run the curation chain over ``docs`` (doc_id, text, …). Stage outputs
     land as ``dp_<dataset_id>_<stage>`` snapshots; re-running with the same
     (warehouse, dataset_id) skips completed stages (S9 resume semantics).
@@ -134,7 +127,7 @@ def curate(
     text. Both knobs join the config fingerprint only when set, so legacy
     datasets resume under default knobs without a config-mismatch refusal
     (same pattern as ``near_dup_verify_threshold``)."""
-    res = CurationResult(run_id=run_id)
+    res = RunResult(run_id=run_id)
     metrics_rows: list[tuple] = []
 
     # Resume is keyed by (stage, dataset_id), NOT by the knob values — so a
@@ -205,23 +198,21 @@ def curate(
     def tbl(stage: str) -> str:
         return f"dp_{dataset_id}_{stage}"
 
-    def stage(name: str, compute) -> DataFrame:
-        if store.is_done(f"dp_{name}", dataset_id):
-            res.stages_skipped.append(name)
-        else:
-            store.write_snapshot(tbl(name), compute(), partition_by=())
-            store.mark_done(f"dp_{name}", dataset_id, run_id=run_id)
-            res.stages_run.append(name)
+    def dp_stage(name: str, compute) -> DataFrame:
+        """One ``dp_`` stage through the runner, then its read-back count —
+        computed from the committed snapshot whether the stage ran or not."""
+        res.run_or_skip(store, name, dataset_id, lambda: store.write_snapshot(
+            tbl(name), compute(), partition_by=()), prefix="dp_")
         out = store.read(tbl(name))
         n = out.count()
         res.counts[name] = n
         metrics_rows.append((run_id, name, n))
         return out
 
-    exact = stage(
+    exact = dp_stage(
         "exact_dedup", lambda: DD.dedup_exact(docs, "doc_id", "text")
     )
-    near = stage(
+    near = dp_stage(
         "near_dedup",
         lambda: exact.join(
             _near_dup_drop_ids(exact, near_dup_max_dist, near_dup_strategy,
@@ -244,7 +235,7 @@ def curate(
             ).filter(F.col("contaminated")).select("doc_id")
             return near.join(drop, "doc_id", "left_anti")
 
-        cur = stage("decontam", compute_decontam)
+        cur = dp_stage("decontam", compute_decontam)
 
     pre_quality = cur
 
@@ -257,7 +248,7 @@ def curate(
             .drop("keep")
         )
 
-    quality = stage("quality", compute_quality)
+    quality = dp_stage("quality", compute_quality)
 
     cur = quality
     if pii_scrub:
@@ -267,7 +258,7 @@ def curate(
 
             return quality.withColumn("text", redact_pii_col(F.col("text")))
 
-        cur = stage("pii_scrub", compute_pii)
+        cur = dp_stage("pii_scrub", compute_pii)
 
     pre_sample = cur
 
@@ -285,7 +276,7 @@ def curate(
             default_fraction=sample_fraction,
         ).drop("lang")
 
-    sampled = stage("sample", compute_sample)
+    sampled = dp_stage("sample", compute_sample)
 
     def compute_token_stats():
         from ..functions.text import BPE_PRETOKEN_REGEX, GOPHER_WS
@@ -304,7 +295,7 @@ def curate(
             F.length("text").cast("long").alias("chars"),
         )
 
-    stage("token_stats", compute_token_stats)
+    dp_stage("token_stats", compute_token_stats)
 
     metrics = spark.createDataFrame(
         metrics_rows, "run_id string, stage string, rows_out long"

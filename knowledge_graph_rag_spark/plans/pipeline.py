@@ -10,16 +10,20 @@ The Spark re-expression of the reference's upload-csv lifecycle
                      |distinct surfaces|, NOT by corpus size — at 10^12 docs
                      this stage's input is still the vocabulary)
   stage materialize  nodes/edges snapshots partitioned by graph_id
-  stage metrics      per-partition lineage rows per stage → metrics table
+  stage entity_index token inverted index over this graph's node labels
+  stage bucketize    nodes/edges copies bucketed on the join keys
+  metrics            per-partition lineage rows per stage → metrics table
+                     (rewritten on every call, resumed or not)
 
-Every stage commits a snapshot through GraphStore and records itself in the
-manifest; ``run()`` skips stages whose manifest entry + snapshot exist, so a
-killed job resumes idempotently (S9 semantics, ``auto_processor.py:828-887``).
+Every stage goes through the one run-or-skip runner,
+``lineage.RunResult.run_or_skip``: it commits a snapshot through GraphStore
+and records itself in the manifest as ``<stage>::<graph_id>``, and a stage
+whose manifest entry exists is skipped, so a killed job resumes
+idempotently. ``run_incremental`` is one ``incremental`` unit and
+``run_full`` adds ``telemetry`` and ``merge`` through the same runner.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,16 +32,9 @@ from ..operators import canonicalize as C
 from ..operators import extract as X
 from ..operators import graph_build as GB
 from ..operators import link as L
+from ..operators import retrieval as R
 from ..sources.graph_store import GraphStore
-from .lineage import partition_lineage
-
-
-@dataclass
-class PipelineResult:
-    run_id: str
-    stages_run: list[str] = field(default_factory=list)
-    stages_skipped: list[str] = field(default_factory=list)
-    counts: dict[str, int] = field(default_factory=dict)
+from .lineage import RunResult, partition_lineage
 
 
 def run(
@@ -48,45 +45,20 @@ def run(
     run_id: str = "run0",
     enable_lsh_canonicalization: bool = True,
     bucketed_query_tables: bool = True,
-) -> PipelineResult:
-    res = PipelineResult(run_id=run_id)
-    metrics_parts: list[DataFrame] = []
-
-    def stage(name: str, compute, *, write):
-        """Run-or-skip wrapper: compute() → write() → manifest mark."""
-        if store.is_done(name, graph_id):
-            res.stages_skipped.append(name)
-            return None
-        out = compute()
-        write(out)
-        store.mark_done(name, graph_id, run_id=run_id)
-        res.stages_run.append(name)
-        return out
+) -> RunResult:
+    res = RunResult(run_id=run_id)
 
     # --- extract ---------------------------------------------------------------
-    def compute_extract():
-        raw = X.extract_raw(X.explode_spans(docs))
-        return raw
-
-    stage(
-        "extract",
-        compute_extract,
-        write=lambda df: store.write_snapshot("raw_extract", df, partition_by=()),
-    )
+    res.run_or_skip(store, "extract", graph_id, lambda: store.write_snapshot(
+        "raw_extract", X.extract_raw(X.explode_spans(docs)), partition_by=()))
     raw = store.read("raw_extract")
-    metrics_parts.append(partition_lineage(raw, run_id, "extract"))
+    metrics_parts = [partition_lineage(raw, run_id, "extract")]
 
     # --- resolve ---------------------------------------------------------------
-    stage(
-        "resolve_triples",
-        lambda: X.resolve_triples(spark, raw),
-        write=lambda df: store.write_snapshot("triples", df, partition_by=()),
-    )
-    stage(
-        "resolve_mentions",
-        lambda: X.resolve_mentions(spark, raw),
-        write=lambda df: store.write_snapshot("mentions", df, partition_by=()),
-    )
+    res.run_or_skip(store, "resolve_triples", graph_id, lambda: store.write_snapshot(
+        "triples", X.resolve_triples(spark, raw), partition_by=()))
+    res.run_or_skip(store, "resolve_mentions", graph_id, lambda: store.write_snapshot(
+        "mentions", X.resolve_mentions(spark, raw), partition_by=()))
     triples = store.read("triples")
     mentions = store.read("mentions")
     metrics_parts.append(partition_lineage(triples, run_id, "resolve_triples"))
@@ -142,25 +114,13 @@ def run(
             )
         )
 
-    stage(
-        "canonicalize",
-        compute_canonical,
-        write=lambda df: store.write_snapshot("canonical_map", df, partition_by=()),
-    )
+    res.run_or_skip(store, "canonicalize", graph_id, lambda: store.write_snapshot(
+        "canonical_map", compute_canonical(), partition_by=()))
 
     # --- materialize --------------------------------------------------------------
-    def compute_graph():
-        nodes = GB.semantic_nodes(mentions, graph_id)
-        edges = GB.semantic_edges(triples, graph_id)
-        return nodes, edges
-
-    if store.is_done("materialize", graph_id):
-        res.stages_skipped.append("materialize")
-    else:
-        nodes, edges = compute_graph()
-        store.store_graph(nodes, edges)
-        store.mark_done("materialize", graph_id, run_id=run_id)
-        res.stages_run.append("materialize")
+    res.run_or_skip(store, "materialize", graph_id, lambda: store.store_graph(
+        GB.semantic_nodes(mentions, graph_id), GB.semantic_edges(triples, graph_id)
+    ))
     nodes = store.read("nodes").filter(F.col("graph_id") == graph_id)
     edges = store.read("edges").filter(F.col("graph_id") == graph_id)
     metrics_parts.append(partition_lineage(nodes, run_id, "materialize_nodes"))
@@ -173,13 +133,8 @@ def run(
     # instead of scanning nodes. Incremental: only THIS graph's index
     # partition is committed (same partition-scoped protocol as nodes/edges),
     # other graphs' index partitions are carried by manifest reference.
-    from ..operators import retrieval as R
-
-    stage(
-        "entity_index",
-        lambda: nodes,
-        write=lambda df: R.update_entity_index(store, df, graph_id),
-    )
+    res.run_or_skip(store, "entity_index", graph_id,
+                    lambda: R.refresh_entity_index(store, graph_id))
 
     # --- bucketize (default-on; disable for one-shot graphs) ---------------------
     # Query-side acceleration: nodes bucketed+sorted on node_id, edges on src,
@@ -189,29 +144,24 @@ def run(
     if bucketed_query_tables:
         from ..operators import bucketing as B
 
-        nt, et = f"{graph_id}_nodes_bucketed", f"{graph_id}_edges_bucketed"
-        if store.is_done("bucketize", graph_id):
-            # resume in a NEW session: the files are on disk but bucket
-            # metadata is catalog (per-session) state — re-declare the spec
-            # over the existing files, zero data writes
-            for name, path, cols in (
-                (nt, f"{store.root}/bucketed/{graph_id}_nodes", ["node_id"]),
-                (et, f"{store.root}/bucketed/{graph_id}_edges", ["src"]),
-            ):
-                if not spark.catalog.tableExists(name):
-                    B.register_bucketed(spark, name, path, cols, 16)
-            res.stages_skipped.append("bucketize")
-        else:
-            B.write_bucketed(
-                nodes, nt, ["node_id"], 16,
-                path=f"{store.root}/bucketed/{graph_id}_nodes",
-            )
-            B.write_bucketed(
-                edges, et, ["src"], 16,
-                path=f"{store.root}/bucketed/{graph_id}_edges",
-            )
-            store.mark_done("bucketize", graph_id, run_id=run_id)
-            res.stages_run.append("bucketize")
+        tables = [
+            (f"{graph_id}_{kind}_bucketed", df,
+             f"{store.root}/bucketed/{graph_id}_{kind}", [key])
+            for kind, df, key in (("nodes", nodes, "node_id"),
+                                  ("edges", edges, "src"))
+        ]
+
+        def bucketize():
+            for name, df, path, cols in tables:
+                B.write_bucketed(df, name, cols, 16, path=path)
+
+        if not res.run_or_skip(store, "bucketize", graph_id, bucketize):
+            # resume in a NEW session, or after another warehouse declared
+            # the same names: the files are on disk but bucket metadata is
+            # catalog (per-session) state — re-declare the spec over THIS
+            # warehouse's files, zero data writes
+            for name, _, path, cols in tables:
+                B.register_bucketed(spark, name, path, cols, 16)
 
     # --- metrics -------------------------------------------------------------------
     all_metrics = metrics_parts[0]
@@ -234,7 +184,7 @@ def run_incremental(
     store: GraphStore,
     graph_id: str = "kg_main",
     run_id: str = "inc0",
-) -> PipelineResult:
+) -> RunResult:
     """Incremental KG construction: extract ONLY the new documents and fold
     them into the existing graph — the 10^12-doc reality where reprocessing
     the corpus per batch is impossible.
@@ -247,63 +197,63 @@ def run_incremental(
     partition-scoped store rewrites only this graph_id (Iceberg would append
     files instead of rewriting the partition; same call site).
 
-    Re-running the same run_id is a no-op (manifest guard); per-run triple /
-    mention snapshots keep lineage per increment."""
-    res = PipelineResult(run_id=run_id)
-    if store.is_done("incremental", f"{graph_id}::{run_id}"):
-        res.stages_skipped.append("incremental")
-        return res
+    The whole fold-in is ONE run-or-skip unit keyed
+    ``incremental::<graph_id>::<run_id>``: re-running the same run_id is a
+    no-op that reports the same counts (read back from the per-run triple /
+    mention snapshots, which keep lineage per increment)."""
+    res = RunResult(run_id=run_id)
 
-    raw = X.extract_raw(X.explode_spans(new_docs))
-    triples_new = X.resolve_triples(spark, raw)
-    mentions_new = X.resolve_mentions(spark, raw)
-    store.write_snapshot(f"triples_{run_id}", triples_new, partition_by=())
-    store.write_snapshot(f"mentions_{run_id}", mentions_new, partition_by=())
-    triples_new = store.read(f"triples_{run_id}")
-    mentions_new = store.read(f"mentions_{run_id}")
+    def fold_in():
+        raw = X.extract_raw(X.explode_spans(new_docs))
+        store.write_snapshot(f"triples_{run_id}", X.resolve_triples(spark, raw),
+                             partition_by=())
+        store.write_snapshot(f"mentions_{run_id}",
+                             X.resolve_mentions(spark, raw), partition_by=())
+        triples_new = store.read(f"triples_{run_id}")
+        mentions_new = store.read(f"mentions_{run_id}")
 
-    nodes_new = GB.semantic_nodes(mentions_new, graph_id)
-    edges_new = GB.semantic_edges(triples_new, graph_id)
-    old_nodes = store.read_partition("nodes", graph_id) if store.exists("nodes") else None
-    old_edges = store.read_partition("edges", graph_id) if store.exists("edges") else None
-    # WHOLE-row dedup, not key-column dedup: node/edge rows are pure
-    # functions of the entity/triple, so identical rows are true re-unions
-    # (doc seen in both batches) while rows that merely collide in the
-    # 48-bit edge_id / node_id hash differ in other columns and must BOTH
-    # survive — exactly what a from-scratch run keeps. Map-typed columns
-    # (props) can't be dedup keys; they too are pure functions of the
-    # remaining columns, so dropping on the non-map set is equivalent.
-    from pyspark.sql import types as _T
-
-    def _dedup_all(df: DataFrame) -> DataFrame:
-        keys = [
-            f.name for f in df.schema.fields
-            if not isinstance(f.dataType, _T.MapType)
-        ]
-        return df.dropDuplicates(keys)
-
-    if old_nodes is not None:
-        nodes_new = _dedup_all(
-            old_nodes.unionByName(nodes_new, allowMissingColumns=True)
+        nodes_new = GB.semantic_nodes(mentions_new, graph_id)
+        edges_new = GB.semantic_edges(triples_new, graph_id)
+        old_nodes, old_edges = (
+            store.read_partition(t, graph_id) if store.exists(t) else None
+            for t in ("nodes", "edges")
         )
-    if old_edges is not None:
-        edges_new = _dedup_all(
-            old_edges.unionByName(edges_new, allowMissingColumns=True)
-        )
-    store.store_graph(nodes_new, edges_new)
-    # keep the fulltext index consistent with the folded-in nodes (same
-    # invariant as run()'s entity_index stage: index == f(current partition))
-    from ..operators import retrieval as R
+        # WHOLE-row dedup, not key-column dedup: node/edge rows are pure
+        # functions of the entity/triple, so identical rows are true re-unions
+        # (doc seen in both batches) while rows that merely collide in the
+        # 48-bit edge_id / node_id hash differ in other columns and must BOTH
+        # survive — exactly what a from-scratch run keeps. Map-typed columns
+        # (props) can't be dedup keys; they too are pure functions of the
+        # remaining columns, so dropping on the non-map set is equivalent.
+        from pyspark.sql import types as _T
 
-    R.refresh_entity_index(store, graph_id)
+        def _dedup_all(df: DataFrame) -> DataFrame:
+            keys = [
+                f.name for f in df.schema.fields
+                if not isinstance(f.dataType, _T.MapType)
+            ]
+            return df.dropDuplicates(keys)
 
-    metrics = partition_lineage(triples_new, run_id, "incremental_triples")
-    store.write_snapshot(f"metrics_{run_id}", metrics, partition_by=())
-    store.mark_done("incremental", f"{graph_id}::{run_id}", run_id=run_id)
-    res.stages_run.append("incremental")
+        if old_nodes is not None:
+            nodes_new = _dedup_all(
+                old_nodes.unionByName(nodes_new, allowMissingColumns=True)
+            )
+        if old_edges is not None:
+            edges_new = _dedup_all(
+                old_edges.unionByName(edges_new, allowMissingColumns=True)
+            )
+        store.store_graph(nodes_new, edges_new)
+        # keep the fulltext index consistent with the folded-in nodes (same
+        # invariant as run()'s entity_index stage: index == f(current partition))
+        R.refresh_entity_index(store, graph_id)
+
+        metrics = partition_lineage(triples_new, run_id, "incremental_triples")
+        store.write_snapshot(f"metrics_{run_id}", metrics, partition_by=())
+
+    res.run_or_skip(store, "incremental", f"{graph_id}::{run_id}", fold_in)
     res.counts = {
-        "new_triples": triples_new.count(),
-        "new_mentions": mentions_new.count(),
+        "new_triples": store.read(f"triples_{run_id}").count(),
+        "new_mentions": store.read(f"mentions_{run_id}").count(),
     }
     return res
 
@@ -317,32 +267,25 @@ def run_full(
     semantic_graph_id: str = "kg_semantic",
     telemetry_graph_id: str = "kg_telemetry",
     merged_graph_id: str = "kg_merged",
-) -> PipelineResult:
+) -> RunResult:
     """The reference's full upload-csv + merge lifecycle (SURVEY.md §3.1 +
     graph_merger): semantic KG from documents, telemetry KG from network
     logs, cross-source MERGE with provenance, all checkpointed/resumable.
 
-    Returns the semantic PipelineResult augmented with merge stats in
-    ``counts`` (A20)."""
+    Returns the semantic RunResult, with the ``telemetry`` and ``merge``
+    stages appended and merge stats in ``counts`` (A20)."""
     from ..operators import network as N
 
     res = run(spark, docs, store, graph_id=semantic_graph_id, run_id=run_id,
               enable_lsh_canonicalization=False)
 
-    if not store.is_done("telemetry", telemetry_graph_id):
+    def build_telemetry():
         conns = N.score_connections(N.parse_logs(logs))
-        t_nodes = GB.telemetry_nodes(conns, telemetry_graph_id)
-        t_edges = GB.telemetry_edges(conns, telemetry_graph_id)
-        store.store_graph(t_nodes, t_edges)
-        from ..operators import retrieval as R
-
+        store.store_graph(GB.telemetry_nodes(conns, telemetry_graph_id),
+                          GB.telemetry_edges(conns, telemetry_graph_id))
         R.refresh_entity_index(store, telemetry_graph_id)
-        store.mark_done("telemetry", telemetry_graph_id, run_id=run_id)
-        res.stages_run.append("telemetry")
-    else:
-        res.stages_skipped.append("telemetry")
 
-    if not store.is_done("merge", merged_graph_id):
+    def merge():
         nodes = store.read("nodes")
         edges = store.read("edges")
         sn = nodes.filter(F.col("graph_id") == semantic_graph_id)
@@ -351,14 +294,11 @@ def run_full(
         te = edges.filter(F.col("graph_id") == telemetry_graph_id)
         mn, me, stats = GB.merge_graphs(sn, se, tn, te, merged_graph_id)
         store.store_graph(mn, me)
-        from ..operators import retrieval as R
-
         R.refresh_entity_index(store, merged_graph_id)
         store.write_snapshot("merge_stats", stats, partition_by=())
-        store.mark_done("merge", merged_graph_id, run_id=run_id)
-        res.stages_run.append("merge")
-    else:
-        res.stages_skipped.append("merge")
+
+    res.run_or_skip(store, "telemetry", telemetry_graph_id, build_telemetry)
+    res.run_or_skip(store, "merge", merged_graph_id, merge)
 
     for r in store.read("merge_stats").collect():
         res.counts[f"merge_{r.stat}"] = r.value

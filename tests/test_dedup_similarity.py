@@ -1031,6 +1031,66 @@ def test_minhash_index_probe_distance_filter(spark, tmp_path):
     assert DD.minhash_index_probe(probes, path, bucket_cap=0).count() == 0
 
 
+def test_minhash_batch_vs_probe_differ_near_threshold(spark, tmp_path):
+    """Batch minhash_lsh_pairs and the persisted-index probe take the same
+    ``jaccard_max_dist`` but decide differently near it: the batch join keeps
+    a candidate (>= 1 shared band) whose EXACT Jaccard distance of the
+    hashed word-3-gram sets is below the threshold; the probe keeps a pair
+    that shares at least ceil((1 - d) * 12) of its 12 bands. Variants of one
+    base text with a few words swapped land on both sides of d = 0.5, and
+    the two rules disagree in both directions."""
+    import random
+
+    words = ("river meadow crane heron fog water stone bridge lantern harbor "
+             "valley orchard canyon glacier prairie thicket marsh willow ember "
+             "cinder falcon otter badger walnut saffron copper pewter amber "
+             "juniper basalt").split()
+
+    def variant(n_swaps, seed):
+        w = list(words)
+        for j, pos in enumerate(
+                random.Random(seed).sample(range(len(w)), n_swaps)):
+            w[pos] = f"swap{seed}x{j}"
+        return " ".join(w)
+
+    rows = [(0, " ".join(words))] + [
+        (i, variant(k, 100 * k + s))
+        for i, (k, s) in enumerate(
+            ((k, s) for k in (3, 4, 5) for s in range(8)), start=1)
+    ]
+
+    def grams(text):
+        w = text.split()
+        return {" ".join(w[j:j + 3]) for j in range(len(w) - 2)}
+
+    g0 = grams(rows[0][1])
+    exact_dist = {i: 1 - len(g0 & grams(t)) / len(g0 | grams(t))
+                  for i, t in rows[1:]}
+    docs = spark.createDataFrame(rows, "id int, text string")
+    d, min_bands = 0.5, 6  # ceil((1 - 0.5) * 12)
+
+    buckets = DD._minhash_buckets(docs)
+    shared = {
+        r.id: r.n for r in buckets.filter("id != 0")
+        .join(buckets.filter("id = 0").select("band", "bucket"),
+              ["band", "bucket"])
+        .groupBy("id").agg(F.count("*").alias("n")).collect()
+    }
+    batch = {r.id_b for r in DD.minhash_lsh_pairs(docs, jaccard_max_dist=d)
+             .filter("id_a = 0").collect()}
+    path = str(tmp_path / "idx")
+    DD.build_minhash_index(docs.filter("id = 0"), path)
+    probe = {r.probe_id for r in DD.minhash_index_probe(
+        docs.filter("id != 0"), path, jaccard_max_dist=d).collect()}
+
+    for i, _ in rows[1:]:
+        n = shared.get(i, 0)
+        assert (i in batch) == (exact_dist[i] < d and n >= 1), (i, exact_dist[i], n)
+        assert (i in probe) == (n >= min_bands), (i, exact_dist[i], n)
+    # both directions of disagreement occur on these inputs
+    assert batch - probe and probe - batch, (batch, probe)
+
+
 def test_pack_sequences_semantics(spark):
     """Packing is doc-atomic, budget-bounded modulo the boundary doc,
     position-dense per sequence, deterministic under repartitioning, and

@@ -8,6 +8,17 @@ from knowledge_graph_rag_spark.plans import pipeline
 from knowledge_graph_rag_spark.sources.graph_store import GraphStore
 
 
+#: pipeline.run's stages, in the order they run and are reported
+RUN_STAGES = ["extract", "resolve_triples", "resolve_mentions", "canonicalize",
+              "materialize", "entity_index", "bucketize"]
+
+
+def _manifest_keys(graph_id, stages=RUN_STAGES):
+    """Manifest keys a completed run leaves: existing warehouses resume by
+    them, so they must not change."""
+    return [f"{s}::{graph_id}" for s in stages]
+
+
 @pytest.fixture()
 def store(spark, tmp_path):
     return GraphStore(spark, str(tmp_path / "warehouse"))
@@ -297,7 +308,8 @@ def test_pipeline_run_and_resume(spark, store):
     docs = synth.documents_df(spark, 40)
     res1 = pipeline.run(spark, docs, store, graph_id="kg", run_id="r1",
                         enable_lsh_canonicalization=False)
-    assert res1.stages_run and not res1.stages_skipped
+    assert res1.stages_run == RUN_STAGES and not res1.stages_skipped
+    assert store.completed_stages() == sorted(_manifest_keys("kg"))
     nodes1 = store.read("nodes")
     triples1 = store.read("triples")
     c_nodes, c_triples = nodes1.count(), triples1.count()
@@ -306,8 +318,9 @@ def test_pipeline_run_and_resume(spark, store):
     # second run resumes: every stage skipped, outputs identical
     res2 = pipeline.run(spark, docs, store, graph_id="kg", run_id="r2",
                         enable_lsh_canonicalization=False)
-    assert not res2.stages_run
-    assert set(res2.stages_skipped) >= {"extract", "resolve_triples", "materialize"}
+    assert res2.stages_run == [] and res2.stages_skipped == RUN_STAGES
+    assert res2.counts == res1.counts
+    assert store.completed_stages() == sorted(_manifest_keys("kg"))
     assert store.read("nodes").count() == c_nodes
     assert store.read("triples").count() == c_triples
 
@@ -358,6 +371,8 @@ def test_incremental_equals_from_scratch(spark, store, tmp_path):
     res = pipeline.run_incremental(spark, rest, store, graph_id="kg",
                                    run_id="inc1")
     assert res.stages_run == ["incremental"] and res.counts["new_triples"] > 0
+    assert store.completed_stages() == sorted(
+        _manifest_keys("kg") + ["incremental::kg::inc1"])
 
     for table in ("nodes", "edges"):
         got = {tuple(r) for r in store.read(table).collect()}
@@ -367,7 +382,8 @@ def test_incremental_equals_from_scratch(spark, store, tmp_path):
     # idempotent re-run
     res2 = pipeline.run_incremental(spark, rest, store, graph_id="kg",
                                     run_id="inc1")
-    assert res2.stages_skipped == ["incremental"]
+    assert res2.stages_skipped == ["incremental"] and res2.stages_run == []
+    assert res2.counts == res.counts
     assert store.read("nodes").count() == ref_store.read("nodes").count()
 
 
@@ -390,8 +406,12 @@ def test_run_full_merged_pipeline(spark, store):
 
     docs = synth.documents_df(spark, 40)
     logs = synth.network_logs_df(spark, 150)
+    full_stages = RUN_STAGES + ["telemetry", "merge"]
+    full_keys = sorted(_manifest_keys("kg_semantic")
+                       + ["telemetry::kg_telemetry", "merge::kg_merged"])
     res = run_full(spark, docs, logs, store, run_id="rf")
-    assert {"telemetry", "merge"} <= set(res.stages_run)
+    assert res.stages_run == full_stages and not res.stages_skipped
+    assert store.completed_stages() == full_keys
     assert res.counts["merge_new_correlations"] > 0
     assert sorted(store.list_graphs()) == ["kg_merged", "kg_semantic", "kg_telemetry"]
 
@@ -401,7 +421,33 @@ def test_run_full_merged_pipeline(spark, store):
 
     # resume: everything skipped
     res2 = run_full(spark, docs, logs, store, run_id="rf2")
-    assert not res2.stages_run
+    assert res2.stages_run == [] and res2.stages_skipped == full_stages
+    assert res2.counts == res.counts
+    assert store.completed_stages() == full_keys
+
+
+def test_bucketize_resume_rebinds_session_tables(spark, store, tmp_path):
+    """Resume warehouse B after warehouse A was built under the same graph
+    id in the same session: every stage is skipped, and the session's
+    bucketed tables read B's files again, not A's."""
+    docs_b = synth.documents_df(spark, 30)
+    res_b = pipeline.run(spark, docs_b, store, graph_id="kg", run_id="b",
+                         enable_lsh_canonicalization=False)
+    pipeline.run(spark, synth.documents_df(spark, 60),
+                 GraphStore(spark, str(tmp_path / "whA")), graph_id="kg",
+                 run_id="a", enable_lsh_canonicalization=False)
+    try:
+        res = pipeline.run(spark, docs_b, store, graph_id="kg", run_id="b2",
+                           enable_lsh_canonicalization=False)
+        assert res.stages_run == [] and res.stages_skipped == RUN_STAGES
+        for kind, key in (("nodes", "node_id"), ("edges", "edge_id")):
+            got = [r[key] for r in
+                   spark.table(f"kg_{kind}_bucketed").select(key).collect()]
+            assert len(got) == res_b.counts[kind]
+            assert set(got) == {r[key] for r in store.read(kind).collect()}
+    finally:
+        spark.sql("DROP TABLE IF EXISTS kg_nodes_bucketed")
+        spark.sql("DROP TABLE IF EXISTS kg_edges_bucketed")
 
 
 def test_canonicalize_never_links_telemetry(spark, store):
